@@ -72,12 +72,13 @@ def _mem_capped_width(
     harsh geometries — the r11 vanilla-sweep marathon ran 32 executor
     threads over a default 1 GiB heap and OOMed in 32-way
     spill-thrashing aggregates at ~13 MB execution memory per task;
-    under this cap the same session fans out 13-wide instead. Floor 2
-    so the helper still parallelizes a little on tiny heaps (matching
-    loop_shuffle_partitions' floor)."""
+    under this cap the same session fans out 13-wide instead. The cap
+    has a floor of 2 so the helper still parallelizes a little on tiny
+    heaps (matching loop_shuffle_partitions' floor), but the width
+    never exceeds ``par``: a single-core session stays at 1."""
     exec_bytes = max(0.0, float(heap_bytes) - (300 << 20)) * mem_fraction
     cap = int(exec_bytes // min_task_bytes)
-    return max(2, min(par, cap))
+    return min(par, max(2, cap))
 
 
 #: Stop enumerating per-file sizes past this many files: a scan with

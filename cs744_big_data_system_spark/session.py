@@ -6,11 +6,17 @@ assignment1/part3/task2/task2.py:16-21, task2.sh:4). The engine instead
 sets one coherent config and leans on AQE to re-plan at runtime, which
 replaces the manual partition sweep (SURVEY.md §4).
 
-Scale posture: these defaults are written for a real cluster; on
-local[N] they are merely harmless. AQE coalesces small shuffle
-partitions, converts sort-merge joins to broadcast when the runtime
-size allows, and splits skewed partitions — the three behaviours the
-reference approximated by hand.
+Scale posture: the adaptive-execution defaults are written for a real
+cluster; on local[N] they are merely harmless. AQE coalesces small
+shuffle partitions, converts sort-merge joins to broadcast when the
+runtime size allows, and splits skewed partitions — the three
+behaviours the reference approximated by hand.
+
+The codegen-cache size is not merely harmless locally: in local mode
+every task runs in the driver JVM, so one cache serves the whole
+session. When a session's distinct whole-stage plans outnumber the
+cache, each repeat of a query recompiles its generated classes and the
+JIT compiles the freshly loaded copies again.
 """
 
 from __future__ import annotations
@@ -50,6 +56,13 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     # ANSI off: engine follows classic Spark SQL nullable-on-error semantics.
     "spark.sql.ansi.enabled": "false",
+    # Whole-stage codegen cache, default 100 entries. The working set is
+    # larger: ~171 compilations per pipeline_mix pass (pagerank_events
+    # alone 68) and ~135 for the nine-query olap mix (perfbench/README.md),
+    # so a 100-entry cache evicts and recompiles every class on every
+    # pass. Static conf: it takes effect only when get_spark starts the
+    # JVM; a session started elsewhere keeps Spark's 100 entries.
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 
@@ -65,6 +78,15 @@ def _default_driver_mem(env) -> str:
     except (ValueError, OSError):
         total_gb = 4.0
     return f"{min(48, max(2, int(total_gb // 2)))}g"
+
+
+def _default_cpus(env) -> int:
+    """The cores this process may run on (its CPU affinity, which also
+    reflects a container's cpuset). SPARK_GRAFT_CPUS overrides."""
+    override = env.get("SPARK_GRAFT_CPUS")
+    if override:
+        return int(override)
+    return len(os.sched_getaffinity(0))
 
 
 def _default_master(cpus: int, env) -> str | None:
@@ -89,12 +111,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    for local runs; on a real cluster pass ``None`` and submit with
-    ``spark-submit --master ...`` — the builder then respects the
-    submit-time master.
+    ``master`` defaults to ``local[N]`` for local runs, N being
+    ``$SPARK_GRAFT_CPUS`` or else the cores this process may run on; on
+    a real cluster pass ``None`` and submit with ``spark-submit --master
+    ...`` — the builder then respects the submit-time master.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cpus(os.environ)
     if master is None:
         master = _default_master(cpus, os.environ)
     if shuffle_partitions is None:

@@ -1,0 +1,40 @@
+"""Session defaults: the host-sized core count and the codegen cache."""
+
+from __future__ import annotations
+
+import os
+
+from cs744_big_data_system_spark.session import ENGINE_CONF, _default_cpus
+
+CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+
+
+def test_default_cpus_from_affinity_or_env():
+    assert _default_cpus({}) == len(os.sched_getaffinity(0))
+    assert _default_cpus({"SPARK_GRAFT_CPUS": ""}) == len(os.sched_getaffinity(0))
+    assert _default_cpus({"SPARK_GRAFT_CPUS": "3"}) == 3
+
+
+def _compilations(spark) -> int:
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_more_than_spark_default(spark):
+    """Spark's codegen cache holds 100 entries; a session whose distinct
+    whole-stage plans outnumber it recompiles a query each time it runs
+    again. Each literal below is inlined into the generated code, so
+    every plan is its own cache entry: after 150 others, the first plan
+    must still be served from the cache."""
+    assert spark.conf.get(CACHE_CONF) == ENGINE_CONF[CACHE_CONF]
+
+    def plan(i):
+        return spark.range(8).selectExpr(f"id * {i} + {i} AS v")
+
+    first = plan(1).collect()
+    for i in range(2, 152):
+        # Building the RDD compiles the stage on the driver; no job runs.
+        plan(i).rdd.getNumPartitions()
+    before = _compilations(spark)
+    assert plan(1).collect() == first
+    assert _compilations(spark) == before

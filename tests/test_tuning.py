@@ -139,6 +139,7 @@ def test_mem_capped_width_geometries():
     assert _mem_capped_width(32, 600 << 20, 0.6) == 5  # r11 solo OOM probe
     assert _mem_capped_width(32, 100 << 20, 0.6) == 2  # floor
     assert _mem_capped_width(8, 1 << 30, 0.6) == 8  # cap above par: no-op
+    assert _mem_capped_width(1, 48 << 30, 0.6) == 1  # floor never exceeds par
 
 
 def test_fan_out_small_scan_skips_many_file_tables(spark, tmp_path):

@@ -114,7 +114,9 @@ def _vanilla_spark():
     sweep take hours at sf0.01) and the console progress bar off."""
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from cs744_big_data_system_spark.session import _default_cpus
+
+    cpus = _default_cpus(os.environ)
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("selfcheck-vanilla")
