@@ -1,12 +1,12 @@
 """Deterministic synthetic graphs for the large-graph PageRank regime.
 
-The events-derived fixture graph has ~10 nodes, which exercises the
-broadcast-ranks regime only; benchmarking the co-partitioned-links
-regime (the one that matters when ranks don't fit an executor) needs a
-graph whose node set is big enough that broadcasting the rank vector
-each superstep is the wrong plan. Everything is generated JVM-side
-from `spark.range` + hash columns — no driver materialization, fully
-deterministic (xxhash64 is seed-fixed), and sized by two knobs.
+The events-derived fixture graph has ~5 nodes, which exercises the
+driver-side regime (``pagerank_local``) only; benchmarking the
+co-partitioned-links regime (the one that matters when the links don't
+fit the driver) needs a graph with a large node and edge set.
+Everything is generated JVM-side from `spark.range` + hash columns — no
+driver materialization, fully deterministic (xxhash64 is seed-fixed),
+and sized by two knobs.
 """
 
 from __future__ import annotations

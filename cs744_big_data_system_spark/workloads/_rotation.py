@@ -6,58 +6,58 @@ order within a class. Derived from the CORRECTNESS_r*.json
 artifacts at the repo root; tests/test_bench_contract.py
 asserts the wired front still matches them.
 
-Window classes at generation time: 16 from r05, 34 from r06.
+Window classes at generation time: 16 from r06, 34 from r07.
 """
 
 FRONT = [
-    "hll_rollup",
-    "udf_cogroup_arrow",
-    "table_transpose",
-    "sql_scripting",
-    "xml_roundtrip_sort",
-    "ab_test_zstat",
-    "dedup_keep_best",
-    "bloom_decontaminate",
-    "entity_match_pairs",
-    "bitext_margin_mining",
-    "dedup_recall_eval",
-    "cdc_apply",
-    "temperature_resample",
-    "quality_classifier_nb",
-    "graph_personalized_pagerank",
-    "stream_cdc_replay",
-    "text_compression_ratio",
-    "ml_logreg_fit",
-    "multimodal_resize",
-    "pagerank_synthetic",
-    "pagerank_synthetic_broadcast",
-    "ml_linear_fit",
-    "inverted_index",
-    "dedup_incremental",
-    "retrieval_ndcg",
-    "graph_clustering_coeff",
-    "skyline_2d",
-    "graph_link_prediction",
-    "data_card_report",
-    "stream_data_card_replay",
-    "scd2_asof_lookup",
-    "quantile_drift_psi",
-    "sql_pipe_syntax",
-    "dedup_cluster_stats",
-    "audio_frame_features",
-    "sql_recursive_cte",
-    "timeseries_ohlc",
-    "interval_overlap_join",
-    "bm25_search_topk",
-    "parquet_schema_evolution",
-    "stream_upsert_sink_replay",
-    "stream_state_inspect",
-    "video_frame_sample",
-    "gdpr_erase",
-    "cbo_join_reorder",
-    "stream_progress_metrics",
-    "cohort_revenue_matrix",
-    "ps_frontend_agg",
-    "sql_table_function",
-    "string_collation",
+    "udf_map_in_arrow",
+    "stream_dedup_within_watermark_replay",
+    "pyds_sink_roundtrip",
+    "stream_rocksdb_state_replay",
+    "timeseries_interpolate",
+    "dynamic_partition_pruning",
+    "join_bloom_filter",
+    "stream_session_timeout_replay",
+    "udtf_analyze",
+    "txlog_lifecycle_audit",
+    "graph_random_walks",
+    "global_row_ids",
+    "exact_quantiles_2pass",
+    "insert_overwrite_partitions",
+    "ml_kfold_cv",
+    "ks_test_2sample",
+    "global_sort",
+    "filter_project",
+    "flagship_q3",
+    "flagship_q3_sql",
+    "flagship_q5",
+    "join_inner",
+    "join_left_outer",
+    "join_semi",
+    "join_anti",
+    "join_range",
+    "collect_list",
+    "agg_sums_q1",
+    "conditional_agg",
+    "argmax",
+    "distinct_agg",
+    "approx_distinct",
+    "topk",
+    "set_ops",
+    "rollup",
+    "cube",
+    "grouping_sets",
+    "window_ranks",
+    "running_sum",
+    "lag_lead_ntile",
+    "date_funcs",
+    "json_funcs",
+    "string_funcs",
+    "array_funcs",
+    "asof_join",
+    "explode_tokens",
+    "sessionize",
+    "graph_multi_bfs",
+    "weblog_parse_agg",
+    "spatial_join_blocked",
 ]

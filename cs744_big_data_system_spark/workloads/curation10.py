@@ -169,8 +169,6 @@ def q_merkle_row_repair(spark, sf_dir):
     The corruption is the same deterministic one merkle_bucket_diff
     plants (every orderkey divisible by 997 shifted one cent on
     replica B), so the repair set is exactly those orders."""
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
     # ONE orders pass shared by all four consumers (digests A, digests
     # B, repair side A, repair side B): project both replicas' cents
     # plus the bucket from a single scan, then repartition ONCE on the
@@ -181,10 +179,7 @@ def q_merkle_row_repair(spark, sf_dir):
     # coalesce marks the keys NON-NULLABLE (they never are null:
     # o_orderkey is the table key, bucket is md5 of a non-null string)
     # so the semi-joins infer no isnotnull() below the shared exchange.
-    raw = fan_out_small_scan(
-        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice"),
-        "o_orderkey",
-    )
+    raw = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
     key = F.coalesce(F.col("o_orderkey"), F.lit(-1))
     rows = raw.select(

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cs744_big_data_system_spark.graph.pagerank import pagerank
+from cs744_big_data_system_spark.graph.pagerank import pagerank, pagerank_local
 from cs744_big_data_system_spark.graph.synthetic import synthetic_graph
 from cs744_big_data_system_spark.operators.multimodal import extract_features, synthetic_assets
 from cs744_big_data_system_spark.sources.readers import edges_from_events, load_table
@@ -739,24 +739,20 @@ def q_pagerank_events(spark, sf_dir):
     damping 0.85, matching assignment1/part3/task1/task1.py:39,52.
     Golden-graph parity tests: tests/test_pagerank.py."""
     edges = edges_from_events(load_table(spark, sf_dir, "events"))
-    # The event-type graph has few nodes: broadcast the rank vector so
-    # the cached weighted-links table never re-shuffles per superstep,
-    # and size the loop's partitions to the COLLAPSED links table (tens
-    # of rows), not the default shuffle width — 32 near-empty tasks per
-    # superstep are pure scheduling overhead on a tiny graph.
-    ranks = pagerank(
-        edges, iterations=10, damping=0.85, broadcast_ranks=True, num_partitions=4
-    )
+    # The event-type graph has ~5 nodes and <=25 weighted links: Spark
+    # builds the links once and the ten supersteps run on the driver, so
+    # the call costs the same few jobs as one superstep would.
+    ranks = pagerank_local(edges, iterations=10, damping=0.85)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
 def _sql_pagerank_events(iterations: int = 10, damping: float = 0.85) -> str:
-    """Unrolled mirror of graph/pagerank.pagerank on the events-derived
-    graph — PageRank hash-checked (the 6th hash-verified iterative
-    kernel, and the reference's own flagship). Float parity notes: the
-    damping constants are emitted via Python float repr, so DuckDB
-    parses the IDENTICAL doubles Spark's lit(1.0-damping) uses; the
-    per-node contribution sums run over the event-type graph's handful
+    """Unrolled mirror of graph/pagerank.pagerank_local on the
+    events-derived graph — PageRank hash-checked (the 6th hash-verified
+    iterative kernel, and the reference's own flagship). Float parity
+    notes: the damping constants are emitted via Python float repr, so
+    DuckDB parses the IDENTICAL doubles the kernel's 1.0 - damping
+    uses; the per-node contribution sums run over the event-type graph's handful
     of in-edges, so accumulation-order noise is ~1e-16 against a 1e-6
     rounding bucket."""
     parts = [
@@ -856,31 +852,27 @@ SQL_GRAPH_HITS = _sql_graph_hits()
 # --- PageRank on a synthetic large graph: the co-partitioned regime ---
 def q_pagerank_synthetic(spark, sf_dir):
     """240k-edge synthetic graph (graph/synthetic.py), 5 supersteps in
-    the LARGE-graph regime: broadcast_ranks=False with num_partitions
-    matched to the session's shuffle width, so the cached weighted-links
-    table satisfies the join's partitioning and never re-shuffles — the
-    only per-superstep shuffles are the rank vector's. This is the plan
-    you run when ranks don't fit an executor; pagerank_events above is
-    the small-graph broadcast regime. Plan-asserted in
-    tests/test_plans.py; rows-only here (iterative fixed-point)."""
+    the LARGE-graph regime: num_partitions matched to the session's
+    shuffle width, so the cached weighted-links table satisfies the
+    join's partitioning and never re-shuffles — the only per-superstep
+    shuffles are the rank vector's. This is the plan you run when the
+    links don't fit the driver; pagerank_events above runs its
+    supersteps on the driver. Plan-asserted in tests/test_plans.py;
+    rows-only here (iterative fixed-point)."""
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = synthetic_graph(spark, num_nodes=30_000, avg_out_degree=8)
-    ranks = pagerank(
-        edges, iterations=5, damping=0.85,
-        broadcast_ranks=False, num_partitions=n_shuffle,
-    )
+    ranks = pagerank(edges, iterations=5, damping=0.85, num_partitions=n_shuffle)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-# --- Same graph, broadcast regime: the BENCH pair for comparison ---
+# --- Same graph, supersteps on the driver: the pair for comparison ---
 def q_pagerank_synthetic_broadcast(spark, sf_dir):
-    """Identical graph and supersteps but broadcast_ranks=True — at
-    30k nodes the rank vector still fits an executor, so the bench rows
-    for this pair quantify the regime crossover round-over-round."""
+    """Identical graph and supersteps through graph/pagerank.pagerank_local:
+    the 240k edges collapse to weighted links that fit the driver, so
+    this pair compares the two regimes on one graph. The registry name
+    is kept from the broadcast-ranks regime this kernel replaced."""
     edges = synthetic_graph(spark, num_nodes=30_000, avg_out_degree=8)
-    ranks = pagerank(
-        edges, iterations=5, damping=0.85, broadcast_ranks=True, num_partitions=4
-    )
+    ranks = pagerank_local(edges, iterations=5, damping=0.85)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -2007,6 +1999,6 @@ WORKLOADS = {
     "multimodal_features": (q_multimodal_features, None),  # decode stubbed
     "multimodal_resize": (q_multimodal_resize, None),  # real decode+resample; PPM re-encode not SQL-mirrorable
     "pagerank_synthetic": (q_pagerank_synthetic, None),  # iterative, co-partitioned regime
-    "pagerank_synthetic_broadcast": (q_pagerank_synthetic_broadcast, None),  # broadcast regime
+    "pagerank_synthetic_broadcast": (q_pagerank_synthetic_broadcast, None),  # driver-side supersteps
     "ml_linear_fit": (q_ml_linear_fit, None),  # iterative training loop
 }

@@ -10,6 +10,8 @@ mass is discarded, duplicate edges contribute multiply.
 
 from __future__ import annotations
 
+import importlib
+
 import pytest
 
 
@@ -44,35 +46,64 @@ GOLDEN_EDGES = [
 ]
 
 
-def run_engine(spark, edges, **kw):
-    from cs744_big_data_system_spark.graph.pagerank import pagerank
+#: Both PageRank kernels: the co-partitioned Spark loop and the
+#: driver-side supersteps over the collected weighted links.
+KERNELS = ("pagerank", "pagerank_local")
 
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    return {r["node"]: r["rank"] for r in pagerank(df, **kw).collect()}
+
+def kernel_fn(kernel):
+    # graph/__init__ re-exports `pagerank`, shadowing the module of that name
+    return getattr(importlib.import_module("cs744_big_data_system_spark.graph.pagerank"), kernel)
+
+
+def run_engine(spark, edges, kernel="pagerank", **kw):
+    df = spark.createDataFrame(edges, "src string, dst string")
+    return {r["node"]: r["rank"] for r in kernel_fn(kernel)(df, **kw).collect()}
 
 
 def test_golden_graph_parity(spark):
     expected = reference_pagerank(GOLDEN_EDGES, iters=10)
-    got = run_engine(spark, GOLDEN_EDGES, iterations=10)
-    assert set(got) == set(expected)
-    for node, r in expected.items():
-        assert got[node] == pytest.approx(r, rel=1e-9), node
+    for kernel in KERNELS:
+        got = run_engine(spark, GOLDEN_EDGES, kernel, iterations=10)
+        assert set(got) == set(expected), kernel
+        for node, r in expected.items():
+            assert got[node] == pytest.approx(r, rel=1e-9), (kernel, node)
 
 
 def test_destination_only_node_receives_rank(spark):
-    got = run_engine(spark, GOLDEN_EDGES, iterations=3)
-    # d has no out-edges: it must appear (it receives contributions)
-    # but never contributes — its mass is discarded (task1.py:44-47).
-    assert "d" in got
-    # e contributes in iter 1 but receives nothing → drops out of ranks.
-    assert "e" not in got
+    for kernel in KERNELS:
+        got = run_engine(spark, GOLDEN_EDGES, kernel, iterations=3)
+        # d has no out-edges: it must appear (it receives contributions)
+        # but never contributes — its mass is discarded (task1.py:44-47).
+        assert "d" in got, kernel
+        # e contributes in iter 1 but receives nothing → drops out of ranks.
+        assert "e" not in got, kernel
 
 
 def test_duplicate_edges_multiset(spark):
     # a→b twice out of 3 out-edges: b gets 2/3 of a's rank in iter 1.
     expected = reference_pagerank(GOLDEN_EDGES, iters=1)
-    got = run_engine(spark, GOLDEN_EDGES, iterations=1)
-    assert got["b"] == pytest.approx(expected["b"], rel=1e-9)
+    for kernel in KERNELS:
+        got = run_engine(spark, GOLDEN_EDGES, kernel, iterations=1)
+        assert got["b"] == pytest.approx(expected["b"], rel=1e-9), kernel
+
+
+def test_null_ids(spark):
+    """A null dst is a node that receives rank; a null src is dropped
+    by the links ⋈ degree join, so its edge contributes nothing."""
+    edges = [("a", "b"), ("b", None), (None, "a"), ("b", "a"), ("a", "a")]
+    expected = {None: 0.394375, "a": 0.742609375, "b": 0.498234375}
+    for kernel in KERNELS:
+        got = run_engine(spark, edges, kernel, iterations=3)
+        assert got == pytest.approx(expected, rel=1e-12), kernel
+
+
+def test_empty_edge_set(spark):
+    edges = spark.createDataFrame([], "src string, dst string")
+    for kernel in KERNELS:
+        ranks = kernel_fn(kernel)(edges, iterations=3)
+        assert ranks.schema.simpleString() == "struct<node:string,rank:double>", kernel
+        assert ranks.collect() == [], kernel
 
 
 def test_partition_knob_and_no_cache_same_result(spark):
@@ -103,7 +134,6 @@ def test_knobs_do_not_change_results(spark):
     for kw in (
         {"num_partitions": 3},
         {"cache_links": False},
-        {"broadcast_ranks": True},
         {"checkpoint_every": 1},
         {"checkpoint_every": 0},
     ):

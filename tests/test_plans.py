@@ -151,9 +151,9 @@ def _exchange_input_blocks(plan: str) -> list[str]:
 
 
 def test_pagerank_copartitioned_links_never_reshuffle(spark):
-    """Large-graph regime (broadcast_ranks=False, num_partitions matched
-    to the shuffle width): the cached links table's hash partitioning on
-    src satisfies every superstep's join, so the planner inserts no
+    """Large-graph regime (num_partitions matched to the shuffle
+    width): the cached links table's hash partitioning on src
+    satisfies every superstep's join, so the planner inserts no
     ENSURE_REQUIREMENTS exchange on the links side AND shuffles the rank
     vector exactly once per superstep (its own aggregation). The control
     (mismatched partition count) makes Spark chase links' foreign
@@ -177,14 +177,14 @@ def test_pagerank_copartitioned_links_never_reshuffle(spark):
 
     good = bad = None
     try:
-        good = pagerank(edges, iterations=3, broadcast_ranks=False, num_partitions=n)
+        good = pagerank(edges, iterations=3, num_partitions=n)
         plan = formatted_plan(good)
         assert "SortMergeJoin" in plan, plan
         assert [b for b in _exchange_input_blocks(plan)
                 if "n_para" in b and "out_degree" in b] == [], plan
         assert rank_reshuffles(plan) == [], plan
 
-        bad = pagerank(edges, iterations=3, broadcast_ranks=False, num_partitions=n + 3)
+        bad = pagerank(edges, iterations=3, num_partitions=n + 3)
         assert len(rank_reshuffles(formatted_plan(bad))) >= 2
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -213,7 +213,7 @@ def test_pagerank_partition_sweep_no_reshuffle(spark):
     try:
         for m in (4, 8, 16):
             spark.conf.set("spark.sql.shuffle.partitions", str(m))
-            ranks = pagerank(edges, iterations=2, broadcast_ranks=False, num_partitions=m)
+            ranks = pagerank(edges, iterations=2, num_partitions=m)
             try:
                 plan = formatted_plan(ranks)
                 links_reshuffles = [
@@ -230,30 +230,28 @@ def test_pagerank_partition_sweep_no_reshuffle(spark):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
-def test_pagerank_broadcast_regime_broadcasts_ranks(spark):
-    """Small-graph regime: every superstep joins the rank vector as an
-    explicit broadcast; the cached links table never shuffles at all."""
-    import re
-
-    from cs744_big_data_system_spark.graph.pagerank import pagerank
+def test_pagerank_local_spark_jobs_do_not_grow_with_iterations(spark):
+    """Small-graph regime: Spark only builds the weighted links, so the
+    call runs the same jobs at 1 superstep as at 20, and it persists no
+    RDD (there is no cached links table to release)."""
+    from cs744_big_data_system_spark.graph.pagerank import pagerank_local
     from cs744_big_data_system_spark.graph.synthetic import synthetic_graph
-    from cs744_big_data_system_spark.plans.explain import formatted_plan
 
+    sc = spark.sparkContext
     edges = synthetic_graph(spark, num_nodes=500, avg_out_degree=4)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    ranks = None
-    try:
-        ranks = pagerank(edges, iterations=3, broadcast_ranks=True, num_partitions=4)
-        plan = formatted_plan(ranks)
-        # 3 superstep joins (+ possibly the links⋈degree build inside
-        # the cached plan, which the planner may also broadcast)
-        assert len(re.findall(r"\(\d+\) BroadcastHashJoin", plan)) >= 3, plan
-        assert [b for b in _exchange_input_blocks(plan)
-                if "n_para" in b and "out_degree" in b] == [], plan
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        if ranks is not None and ranks.cached_links is not None:
-            ranks.cached_links.unpersist()
+    persisted = sc._jsc.getPersistentRDDs().size()
+
+    def jobs(iterations):
+        group = f"pagerank_local_jobs_{iterations}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank_local(edges, iterations=iterations).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(1) == jobs(20) > 0
+    assert sc._jsc.getPersistentRDDs().size() == persisted
 
 
 def test_decontaminate_broadcasts_benchmark_shingles(spark):

@@ -291,6 +291,8 @@ def main() -> None:
         "sequence before the report sees the plan, so the returned plan is",
         "a LogicalRDD scan of the materialized result — the loop-body plan",
         "shapes are pinned by tests/test_plans.py instead.",
+        "pagerank_synthetic_broadcast likewise returns ranks computed on the",
+        "driver from its collected weighted links.",
         "",
         "| query | shuffles | bcast joins | SMJ | partial aggs | TopK | WinLimit | scans |",
         "|---|---|---|---|---|---|---|---|",
