@@ -63,6 +63,16 @@ ENGINE_CONF: dict[str, str] = {
     # pass. Static conf: it takes effect only when get_spark starts the
     # JVM; a session started elsewhere keeps Spark's 100 entries.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # PySpark's DataFrame debugging, on by default: every `F.*` call and
+    # Column operator looks up the active session, reads a conf, walks
+    # the Python stack for its file:line and sets and clears a JVM-side
+    # origin — four py4j round trips or more per Column op (a
+    # dedup_minhash_lsh build makes 276 such ops). The trade: an
+    # analysis error no longer names the Python line that built the
+    # failing Column; the JVM error and its SQL context remain. Static
+    # conf, read once per Python process (pyspark.errors.utils caches
+    # it), so it holds only when get_spark starts the session.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

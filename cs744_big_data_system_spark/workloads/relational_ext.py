@@ -1751,52 +1751,6 @@ JOIN part_cnt c2 ON c2.l_partkey = p.p2
 """
 
 
-# --- NULL-safe equi-join (<=> / IS NOT DISTINCT FROM) ---
-def q_join_null_safe(spark, sf_dir):
-    """Join on a nullable key with NULL-matches-NULL semantics
-    (eqNullSafe — the §2.9 join variant a plain equi-join silently
-    drops rows on). The key is props.k nullified on a deterministic
-    slice so both engines see identical NULLs; the NULL dim row must
-    collect every nullified event."""
-    from cs744_big_data_system_spark.sources.readers import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    knull = F.when(k % 7 == 0, F.lit(None).cast("long")).otherwise(k)
-    fact = ev.select(F.col("event_id"), knull.alias("k"))
-    dim = (
-        fact.select("k")
-        .distinct()
-        .select(
-            "k",
-            F.concat(
-                F.lit("k="), F.coalesce(F.col("k").cast("string"), F.lit("null"))
-            ).alias("k_label"),
-        )
-    )
-    return (
-        fact.join(dim, fact.k.eqNullSafe(dim.k))
-        .groupBy("k_label")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-SQL_JOIN_NULL_SAFE = """
-WITH fact AS (
-  SELECT event_id,
-         CASE WHEN TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) % 7 = 0 THEN NULL
-              ELSE TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) END AS k
-  FROM events
-), dim AS (
-  SELECT k, 'k=' || coalesce(CAST(k AS VARCHAR), 'null') AS k_label
-  FROM (SELECT DISTINCT k FROM fact)
-)
-SELECT d.k_label, count(*) AS n_events
-FROM fact f JOIN dim d ON f.k IS NOT DISTINCT FROM d.k
-GROUP BY 1
-"""
-
-
 # --- Referential-integrity audit: FK orphan counts via anti-joins ---
 def q_fk_orphans(spark, sf_dir):
     """Orphan counts for every foreign-key edge of the star schema —
@@ -1962,7 +1916,6 @@ WORKLOADS = {
     "events_funnel": (q_events_funnel, SQL_EVENTS_FUNNEL),
     "window_dist": (q_window_dist, SQL_WINDOW_DIST),
     "table_profile": (q_table_profile, SQL_TABLE_PROFILE),
-    "join_null_safe": (q_join_null_safe, SQL_JOIN_NULL_SAFE),
     "fk_orphans": (q_fk_orphans, SQL_FK_ORPHANS),
     "basket_affinity": (q_basket_affinity, SQL_BASKET_AFFINITY),
     "fuzzy_match": (q_fuzzy_match, SQL_FUZZY_MATCH),

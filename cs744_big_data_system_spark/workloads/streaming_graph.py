@@ -1333,13 +1333,13 @@ def q_ml_linear_fit(spark, sf_dir):
     return weights_df(spark, w)
 
 
-# --- GD training loop: broadcast-down / aggregate-up, hash-verified ---
+# --- GD training loop: features pulled once, steps on the driver, hash-verified ---
 def q_ml_linear_gd(spark, sf_dir):
     """Six full-batch gradient-descent rounds fitting label from the
-    first 4 embedding dims + bias (ml/linear_gd.py): per step ONE
-    map-side-combinable aggregation computes all p+1 gradient
-    components (the reference's all-reduce round as one Spark agg),
-    the driver applies the O(p) update. Gradients are quantized with
+    first 4 embedding dims + bias (ml/linear_gd.py): Spark extracts
+    the features once and numpy runs the steps on the driver, each
+    averaging all p+1 gradient components (the reference's all-reduce
+    round) and applying the O(p) update. Gradients are quantized with
     the engine-stable floor form each step, so both engines walk the
     IDENTICAL weight trajectory and the entire training loop
     hash-checks — the 7th hash-verified iterative kernel, and the one

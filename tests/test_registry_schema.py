@@ -43,6 +43,17 @@ def test_driver_canon_rejects_list_cells():
     assert dcols == scols and sorted(drows) == srows
 
 
+def test_registry_rejects_duplicate_names(monkeypatch):
+    """A name registered by two modules raises instead of letting the
+    later module's query and oracle silently replace the earlier one."""
+    from cs744_big_data_system_spark.workloads import curation10, llm
+
+    name, entry = next(iter(llm.WORKLOADS.items()))
+    monkeypatch.setattr(curation10, "WORKLOADS", {**curation10.WORKLOADS, name: entry})
+    with pytest.raises(ValueError, match=name):
+        workloads.all_workloads()
+
+
 def test_oracle_outputs_scalar_only(spark):
     """Every oracle-backed registry entry must return a scalar-only
     schema (no Array/Map/Struct) — the driver's sort_values canon

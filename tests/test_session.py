@@ -38,3 +38,21 @@ def test_codegen_cache_holds_more_than_spark_default(spark):
     before = _compilations(spark)
     assert plan(1).collect() == first
     assert _compilations(spark) == before
+
+
+def test_column_ops_capture_no_call_site(spark, monkeypatch):
+    """The engine session turns PySpark's DataFrame debugging off, so
+    building a Column walks no Python stack: with the call-site capture
+    made to raise, the expression still builds."""
+    import pyspark.errors.utils as errors_utils
+    from pyspark.sql import functions as F
+
+    def capture(depth):
+        raise AssertionError("call site captured")
+
+    monkeypatch.setattr(errors_utils, "_capture_call_site", capture)
+    # The debugging flag is cached per process; re-read it from the
+    # active (engine) session.
+    monkeypatch.setattr(errors_utils, "_enable_debugging_cache", None)
+    F.col("a") + 1
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

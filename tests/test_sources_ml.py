@@ -979,3 +979,66 @@ def test_write_sharded_one_file_per_shard_in_sorted_order(spark, tmp_path):
             .collect()
         ]
         assert got == sorted(got) and len(got) == 50
+
+
+def _gd_fits():
+    from cs744_big_data_system_spark.ml import linear_gd
+
+    return (
+        (linear_gd.linear_gd_fit, linear_gd.sql_linear_gd),
+        (linear_gd.logreg_gd_fit, linear_gd.sql_logreg_gd),
+    )
+
+
+def test_gd_fits_spark_jobs_do_not_grow_with_steps(spark):
+    """The GD loop runs on the driver: Spark extracts the features once,
+    so a fit runs the same jobs at 1 step as at 40."""
+    sc = spark.sparkContext
+    df = spark.createDataFrame(
+        [(i, [i / 100.0, 1.0 - i / 100.0], i % 3) for i in range(100)],
+        ["vec_id", "embedding", "label"],
+    )
+
+    def jobs(fit, steps):
+        group = f"{fit.__name__}_jobs_{steps}"
+        sc.setJobGroup(group, group)
+        try:
+            fit(df, feature_dims=2, steps=steps).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for fit, _ in _gd_fits():
+        assert jobs(fit, 1) == jobs(fit, 40) > 0, fit.__name__
+
+
+def test_gd_fits_equal_duckdb_oracle_with_nulls(spark):
+    """Both fits equal their unrolled-CTE DuckDB oracle on a fixture
+    with a vector shorter than feature_dims (element_at past the end is
+    null), a null label and a negative label: the null rows drop out
+    of every gradient mean on both engines, and the logistic target
+    keeps the sign of label % 2."""
+    import duckdb
+    import pyarrow as pa
+
+    from tools.selfcheck import canon
+
+    vecs = [[0.1 * i, (-1) ** i * 0.05 * i, 0.3 - 0.02 * i] for i in range(40)]
+    labels = [(i * 7) % 5 for i in range(40)]
+    vecs[3] = [0.4, 0.2]
+    labels[5] = None
+    labels[8] = -3
+    table = pa.table(
+        {
+            "vec_id": pa.array(range(40), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array(labels, pa.int32()),
+        }
+    )
+    df = spark.createDataFrame(table)
+    con = duckdb.connect()
+    con.register("embeddings", table)
+    for fit, sql in _gd_fits():
+        got = fit(df, feature_dims=3, steps=5).toPandas()
+        want = con.execute(sql(feature_dims=3, steps=5)).df()
+        assert canon(got) == canon(want), fit.__name__
