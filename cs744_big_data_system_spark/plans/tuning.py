@@ -81,6 +81,24 @@ def _mem_capped_width(
     return min(par, max(2, cap))
 
 
+def _fan_out_width(spark: SparkSession) -> int:
+    """Session parallelism, memory-capped (``_mem_capped_width``) on a
+    ``local[...]`` master only: there the driver JVM is the executor,
+    so its heap is the one the fanned tasks share. On a cluster the
+    driver's heap says nothing about the executors', so the width stays
+    at ``defaultParallelism``."""
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    if not sc.master.startswith("local"):
+        return par
+    try:
+        heap = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
+        frac = float(spark.conf.get("spark.memory.fraction", "0.6"))
+    except Exception:
+        return par
+    return _mem_capped_width(par, heap, frac)
+
+
 #: Stop enumerating per-file sizes past this many files: a scan with
 #: this many splittable files is never split-starved for any sane core
 #: count, and a million-file table must not pay a full driver-side
@@ -120,16 +138,7 @@ def fan_out_small_scan(df, key: str | None = None):
     expensive; cheap columnar aggregates should keep the plain scan.
     """
     spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        # Memory-aware width (guide §5): never schedule more concurrent
-        # fanned tasks than the heap can back with a sane execution-
-        # memory share. A no-op at any realistic heap-per-core.
-        heap = int(spark._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        frac = float(spark.conf.get("spark.memory.fraction", "0.6"))
-        par = _mem_capped_width(par, heap, frac)
-    except Exception:
-        pass
+    par = _fan_out_width(spark)
     try:
         from urllib.parse import unquote, urlparse
 

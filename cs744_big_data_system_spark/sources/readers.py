@@ -11,12 +11,44 @@ Covers SURVEY.md §2.1 S1-S4, S7:
 The engine standardizes on Parquet (columnar at rest, vectorized scan,
 predicate/column pushdown); CSV and text remain supported sources for
 parity with the reference.
+
+Parquet schemas: ``load_table`` (and ``parquet_schema`` for the stream
+sources) takes a local file's schema from its footer, read on the
+driver with pyarrow, and hands it to the reader, so building a scan
+starts no Spark job. Spark still infers the schema itself — a one-task
+job per call — for a directory (partitioned or multi-file tables), a
+non-local URI (HDFS, S3) or a column type the footer mapping does not
+cover.
 """
 
 from __future__ import annotations
 
+import json
+import os
+from urllib.parse import unquote, urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    BooleanType,
+    ByteType,
+    DataType,
+    DateType,
+    DecimalType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    MapType,
+    ShortType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 #: Driver-fixture tables (TESTDATA.md) — one parquet file per table.
 TABLES = (
@@ -39,6 +71,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     Filters/projections composed on the returned DataFrame reach the
     scan (PushedFilters / ReadSchema in .explain) — never pre-collect.
 
+    The schema comes from the file's footer, read on the driver
+    (``_footer_schema``), so building the scan starts no Spark job.
+    Spark still infers it — one job per call — for a directory, a
+    non-local URI or a column type the footer mapping does not cover.
+
     ``events.ts`` is parquet TIMESTAMP(NANOS), which Spark has no native
     type for — read it as nanosecond longs (legacy.parquet.nanosAsLong,
     runtime-settable so any driver-created session works) and truncate
@@ -46,10 +83,166 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (SURVEY.md §7 risk 4).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would have, for callers
+    that need only the schema (a file-stream source): from the footer
+    when ``_footer_schema`` can map it, else from Spark's inference."""
+    schema = _footer_schema(spark, path)
+    return spark.read.parquet(path).schema if schema is None else schema
+
+
+#: Key under which Spark's parquet writer stores the row schema as JSON.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark would infer for one local parquet file, read
+    from its footer on the driver — or None where only Spark's own
+    inference is right.
+
+    Spark infers a parquet schema with a one-task job that reads the
+    footer (``mergeSchemasInParallel``, even for a single file); on a
+    warm local session that job is most of the cost of building a scan
+    of a small table. This mirrors ``readSchemaFromFooter``:
+
+    - a Spark-written file carries its row schema as JSON under
+      ``org.apache.spark.sql.parquet.row.metadata``, which wins;
+    - any other file maps each parquet leaf column the way Spark's
+      ``ParquetToSparkSchemaConverter`` does, with the nesting (struct,
+      list, map) taken from pyarrow's view of the same schema.
+
+    Every field comes back nullable, as Spark makes every field of a
+    file source. None for a directory (partitioned or multi-file
+    datasets), a non-local URI, an unreadable file, or any column type
+    outside the mapping (TIME, FLOAT16, UUID, INTERVAL, decimals over
+    38 digits, nanosecond timestamps without ``nanosAsLong``, ...): the
+    caller then lets Spark infer, and Spark raises its own errors.
+    """
+    import pyarrow.parquet as pq
+
+    uri = urlparse(path)
+    if uri.scheme not in ("", "file"):
+        return None
+    local = unquote(uri.path) if uri.scheme else path
+    if not os.path.isfile(local):
+        return None
+    try:
+        with pq.ParquetFile(local) as pf:
+            meta, arrow_schema = pf.metadata, pf.schema_arrow
+        spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+        if spark_json is not None:
+            return StructType.fromJson(_all_nullable(json.loads(spark_json)))
+        leaves = iter(meta.schema.column(i) for i in range(meta.num_columns))
+        fields = [StructField(f.name, _spark_type(f.type, leaves, spark)) for f in arrow_schema]
+    except (OSError, ValueError, KeyError):
+        # Not parquet, a footer pyarrow cannot read, or a column type
+        # outside the mapping (ValueError from _spark_type/_leaf_type).
+        return None
+    if next(leaves, None) is not None:
+        return None
+    return StructType(fields)
+
+
+def _all_nullable(node):
+    """Spark-JSON schema with every field, element and map value
+    nullable (Spark's ``asNullable``); field metadata is kept as is."""
+    if isinstance(node, list):
+        return [_all_nullable(v) for v in node]
+    if not isinstance(node, dict):
+        return node
+    return {
+        k: True if k in ("nullable", "containsNull", "valueContainsNull")
+        else v if k == "metadata"
+        else _all_nullable(v)
+        for k, v in node.items()
+    }
+
+
+def _spark_type(at, leaves, spark: SparkSession) -> DataType:
+    """Spark type of one pyarrow field type; each primitive consumes the
+    next parquet leaf column, in the footer's depth-first order."""
+    import pyarrow as pa
+    import pyarrow.types as pat
+
+    if pat.is_struct(at):
+        return StructType(
+            [StructField(f.name, _spark_type(f.type, leaves, spark)) for f in at]
+        )
+    if pat.is_list(at) or pat.is_large_list(at) or pat.is_fixed_size_list(at):
+        return ArrayType(_spark_type(at.value_type, leaves, spark))
+    if pat.is_map(at):
+        key = _spark_type(at.key_type, leaves, spark)
+        return MapType(key, _spark_type(at.item_type, leaves, spark))
+    col = next(leaves, None)
+    if col is None or isinstance(at, pa.ExtensionType):
+        raise ValueError(f"unmapped parquet column type {at}")
+    return _leaf_type(col, spark)
+
+
+#: Spark types of parquet physical types that carry no logical type.
+_UNANNOTATED = {
+    "BOOLEAN": BooleanType(),
+    "INT32": IntegerType(),
+    "INT64": LongType(),
+    "FLOAT": FloatType(),
+    "DOUBLE": DoubleType(),
+    "FIXED_LEN_BYTE_ARRAY": BinaryType(),
+}
+
+
+def _leaf_type(col, spark: SparkSession) -> DataType:
+    """Spark type of one parquet leaf column (``ColumnSchema``), after
+    Spark's ``ParquetToSparkSchemaConverter.convertPrimitiveField``."""
+
+    def conf(key: str, default: str) -> bool:
+        return spark.conf.get(key, default).lower() == "true"
+
+    physical = col.physical_type
+    logical = json.loads(col.logical_type.to_json())
+    kind = logical["Type"]
+    if kind == "Decimal":
+        if col.precision > 38:
+            raise ValueError("decimal precision over 38")
+        return DecimalType(col.precision, col.scale)
+    if kind == "None":
+        if physical == "BYTE_ARRAY":
+            binary_as_string = conf("spark.sql.parquet.binaryAsString", "false")
+            return StringType() if binary_as_string else BinaryType()
+        if physical == "INT96" and conf("spark.sql.parquet.int96AsTimestamp", "true"):
+            return TimestampType()
+        if physical in _UNANNOTATED:
+            return _UNANNOTATED[physical]
+    elif kind in ("String", "Enum", "JSON") and physical == "BYTE_ARRAY":
+        return StringType()
+    elif kind == "Date" and physical == "INT32":
+        return DateType()
+    elif kind == "Int" and physical in ("INT32", "INT64"):
+        width, signed = logical["bitWidth"], logical["isSigned"]
+        if signed:
+            return {8: ByteType(), 16: ShortType(), 32: IntegerType(), 64: LongType()}[width]
+        if width == 64:
+            return DecimalType(20, 0)
+        return {8: ShortType(), 16: IntegerType(), 32: LongType()}[width]
+    elif kind == "Timestamp" and physical == "INT64":
+        if logical["timeUnit"] == "nanoseconds":
+            if conf("spark.sql.legacy.parquet.nanosAsLong", "false"):
+                return LongType()
+            raise ValueError("TIMESTAMP(NANOS) without nanosAsLong")
+        if not logical["isAdjustedToUTC"] and conf(
+            "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+        ):
+            return TimestampNTZType()
+        return TimestampType()
+    raise ValueError(f"unmapped parquet column type {physical} {kind}")
 
 
 def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:

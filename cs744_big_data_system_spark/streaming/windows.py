@@ -112,10 +112,10 @@ def replay_to_batch(
     """
     import os
 
-    from cs744_big_data_system_spark.sources.readers import normalize_event_ts
+    from cs744_big_data_system_spark.sources.readers import normalize_event_ts, parquet_schema
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(parquet_path).schema
+    schema = parquet_schema(spark, parquet_path)
     # The file stream source wants a directory; point it at the parent
     # with a glob filter so a single-file fixture replays cleanly.
     reader = spark.readStream.schema(schema)
@@ -352,6 +352,8 @@ def stage_waves_stream(spark: SparkSession, waves: list[DataFrame]):
     cleanup (the stream reads it lazily)."""
     import os
 
+    from cs744_big_data_system_spark.sources.readers import parquet_schema
+
     stage = replay_stage_dir()
     try:
         for i, w in enumerate(waves):
@@ -366,7 +368,7 @@ def stage_waves_stream(spark: SparkSession, waves: list[DataFrame]):
             shutil.rmtree(tmp)
             mtime = 1_700_000_000 + 100 * i
             os.utime(dst, (mtime, mtime))
-        schema = spark.read.parquet(os.path.join(stage, "wave0.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(stage, "wave0.parquet"))
         stream = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "wave*.parquet")

@@ -65,11 +65,8 @@ def q_dedup_keep_best(spark, sf_dir):
     window over the corpus. The final join is cluster_id-keyed,
     cardinality = clustered docs only."""
     docs = load_table(spark, sf_dir, "documents")
-    # Session-memoized simhash→CC table (workloads/llm.py): the cluster
-    # pipeline is the suite's most expensive shared prefix, and the
-    # checkpointed table feeds BOTH the canonical-pick aggregate and
-    # the final join here — plus dedup_clusters itself when both run
-    # in one session (measured ~2x at sf0.01 per consumer).
+    # Checkpointed simhash→CC table (workloads/llm.py): it feeds BOTH
+    # the canonical-pick aggregate and the final join here.
     clusters = simhash_cc_clusters(spark, sf_dir)  # doc_id, cluster_id, cluster_size
     j = clusters.join(docs.select("doc_id", "n_chars"), "doc_id")
     best = (

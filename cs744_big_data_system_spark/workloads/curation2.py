@@ -950,9 +950,8 @@ def q_dedup_cluster_stats(spark, sf_dir):
     duplication-profile report a curation run publishes next to the
     data card: how many clusters of each size, how many docs they
     bind, and how many docs would be removed under keep-one-per-
-    cluster. Reuses the session-memoized CC table (the suite's most
-    expensive shared prefix computes once per session); the stats are
-    two integer aggregations over its few rows."""
+    cluster. Builds on the simhash→CC table of dedup_clusters; the
+    stats are two integer aggregations over its few rows."""
     from cs744_big_data_system_spark.workloads.llm import simhash_cc_clusters
 
     clusters = simhash_cc_clusters(spark, sf_dir)

@@ -498,12 +498,12 @@ def q_stream_state_inspect(spark, sf_dir):
     import os
     import shutil
 
-    from cs744_big_data_system_spark.sources.readers import normalize_event_ts
+    from cs744_big_data_system_spark.sources.readers import normalize_event_ts, parquet_schema
     from cs744_big_data_system_spark.streaming.windows import replay_checkpoint_dir
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
+    schema = parquet_schema(spark, path)
     reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
         reader = reader.option("pathGlobFilter", os.path.basename(path))

@@ -272,36 +272,19 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 
 
 # --- Transitive near-dup clusters (simhash pairs → connected components) ---
-#: Single-slot session cache for the simhash→CC cluster table. The
-#: simhash band join + label propagation is the most expensive shared
-#: prefix in the suite (dedup_clusters AND dedup_keep_best both need
-#: it); the CC output is already localCheckpoint-materialized, so a
-#: second consumer in the same session should reuse those blocks, not
-#: re-run the iteration. Keyed by (applicationId, sf_dir) so a new
-#: session or a different scale factor recomputes.
-_CC_CLUSTER_CACHE: dict = {}
-
-
 def simhash_cc_clusters(spark, sf_dir):
     """(doc_id, cluster_id, cluster_size) for simhash(bits=60, h<=3)
-    near-dup clusters over `documents`, memoized per (session, sf_dir)."""
+    near-dup clusters over `documents`, recomputed on every call so a
+    rewritten `documents` table is always seen."""
     from cs744_big_data_system_spark.graph.connected_components import dedup_clusters
     from cs744_big_data_system_spark.operators.dedup import simhash_hamming_pairs
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_CLUSTER_CACHE.get(key)
-    if hit is not None:
-        return hit
     pairs = simhash_hamming_pairs(
         load_table(spark, sf_dir, "documents"), bits=60, max_hamming=3
     )
     # dedup_clusters returns an eager checkpoint (materialized once);
-    # both the per-doc output and keep_best's two downstream joins
-    # re-scan that table.
-    out = dedup_clusters(pairs)
-    _CC_CLUSTER_CACHE.clear()  # single slot — never grows across sf_dirs
-    _CC_CLUSTER_CACHE[key] = out
-    return out
+    # consumers that join it twice (dedup_keep_best) re-scan that table.
+    return dedup_clusters(pairs)
 
 
 def q_dedup_clusters(spark, sf_dir):

@@ -15,7 +15,11 @@ from pyspark.sql import functions as F
 from cs744_big_data_system_spark.graph.pagerank import pagerank, pagerank_local
 from cs744_big_data_system_spark.graph.synthetic import synthetic_graph
 from cs744_big_data_system_spark.operators.multimodal import extract_features, synthetic_assets
-from cs744_big_data_system_spark.sources.readers import edges_from_events, load_table
+from cs744_big_data_system_spark.sources.readers import (
+    edges_from_events,
+    load_table,
+    parquet_schema,
+)
 from cs744_big_data_system_spark.streaming.stateful import running_counts
 from cs744_big_data_system_spark.streaming.windows import (
     replay_checkpoint_dir,
@@ -114,7 +118,7 @@ def q_stream_txlog_ingest(spark, sf_dir):
             shutil.rmtree(tmp)
             mtime = 1_700_000_000 + 100 * i
             os.utime(dst, (mtime, mtime))
-        schema = spark.read.parquet(os.path.join(stage, "wave0.parquet")).schema
+        schema = parquet_schema(spark, os.path.join(stage, "wave0.parquet"))
         stream = (
             spark.readStream.schema(schema)
             .option("pathGlobFilter", "wave*.parquet")

@@ -356,3 +356,34 @@ def test_semantic_dedup_prunes_within_cluster_only(spark):
     assert out[2].dup_of == 0 and out[3].dup_of == 1
     assert out[2].cluster != out[3].cluster
     assert out[2].cosine > 0.99 and out[3].cosine > 0.99
+
+
+def test_dedup_clusters_see_a_rewritten_documents_table(spark, tmp_path):
+    """q_dedup_clusters reads `documents` on every call: rewriting the
+    table in place within one session changes the clusters it returns
+    (no per-session memo serves the old table)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cs744_big_data_system_spark.workloads.llm import q_dedup_clusters
+
+    def write_docs(texts):
+        pq.write_table(
+            pa.table({
+                "doc_id": pa.array(range(len(texts)), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * len(texts),
+                "source": [f"s{i}" for i in range(len(texts))],
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }),
+            tmp_path / "documents.parquet",
+        )
+
+    def clusters():
+        rows = q_dedup_clusters(spark, str(tmp_path)).collect()
+        return {(r.doc_id, r.cluster_id, r.cluster_size) for r in rows}
+
+    write_docs([BASE, BASE, UNRELATED])
+    assert clusters() == {(0, 0, 2), (1, 0, 2)}
+    write_docs([BASE, BASE, UNRELATED, BASE])
+    assert clusters() == {(0, 0, 3), (1, 0, 3), (3, 0, 3)}

