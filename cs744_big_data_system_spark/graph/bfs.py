@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-
 
 def bfs_hops(
     edges: DataFrame,
@@ -58,11 +56,8 @@ def bfs_hops(
         links = links.repartition(num_partitions, "src")
     links = links.persist()
 
-    # One count: materializes the edge cache (the loop needs it anyway)
-    # and sizes the loop's shuffle width — the per-round distinct() is
-    # the only shuffle and its input is bounded by |E|, so 32 tasks per
-    # round on a 12k-edge graph is pure scheduling overhead.
-    n_links = links.count()
+    # Materialize the edge cache: every round reads it.
+    links.count()
 
     src_lit = F.lit(source)
     node_type = dict(links.dtypes)["src"]
@@ -72,23 +67,6 @@ def bfs_hops(
     frontier = visited.select("node")
     visited_rows = 1
 
-    with loop_shuffle_partitions(spark, n_links):
-        visited = _bfs_loop_single(
-            links, visited, frontier, visited_rows, max_iters, broadcast_threshold
-        )
-        # Materialize INSIDE the scoped-width block (ADVICE r07): the
-        # tail unions since the last hop%4 checkpoint would otherwise
-        # evaluate lazily at the caller's first action at full session
-        # width — the hits/label_propagation discipline.
-        visited = visited.localCheckpoint(eager=True)
-
-    visited.cached_links = links
-    return visited
-
-
-def _bfs_loop_single(
-    links, visited, frontier, visited_rows, max_iters, broadcast_threshold
-):
     for hop in range(1, max_iters + 1):
         # Expand: neighbors of the frontier not yet visited. While the
         # visited set is small, broadcast both small sides so the
@@ -121,6 +99,7 @@ def _bfs_loop_single(
         # checkpoint every few rounds to keep re-analysis linear.
         if hop % 4 == 0:
             visited = visited.localCheckpoint(eager=False)
+    visited.cached_links = links
     return visited
 
 
@@ -149,9 +128,7 @@ def multi_bfs_hops(
         links = links.repartition(num_partitions, "src")
     links = links.persist()
 
-    # Same width sizing as bfs_hops (see comment there): one count
-    # materializes the cache and bounds the loop's only shuffle input.
-    n_links = links.count()
+    links.count()  # materialize the edge cache, as in bfs_hops
 
     node_type = dict(links.dtypes)["src"]
     visited = spark.createDataFrame(
@@ -160,20 +137,6 @@ def multi_bfs_hops(
     frontier = visited.select("seed", "node")
     visited_rows = len(sources)
 
-    with loop_shuffle_partitions(spark, n_links * len(sources)):
-        visited = _bfs_loop_multi(
-            links, visited, frontier, visited_rows, max_iters, broadcast_threshold
-        )
-        # Materialize inside the scoped width — see bfs_hops.
-        visited = visited.localCheckpoint(eager=True)
-
-    visited.cached_links = links
-    return visited
-
-
-def _bfs_loop_multi(
-    links, visited, frontier, visited_rows, max_iters, broadcast_threshold
-):
     for hop in range(1, max_iters + 1):
         small = visited_rows <= broadcast_threshold
         f_side = F.broadcast(frontier) if small else frontier
@@ -194,4 +157,5 @@ def _bfs_loop_multi(
         )
         if hop % 4 == 0:
             visited = visited.localCheckpoint(eager=False)
+    visited.cached_links = links
     return visited

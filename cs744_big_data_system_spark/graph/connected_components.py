@@ -38,13 +38,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Scope the iterative loop's shuffle width to the EDGE count: a
-# candidate-pair graph is orders smaller than its corpus (512 edges at
-# sf0.1 vs 5k docs) — 32 tasks/stage on a 697-node label table measured
-# 6.7 s vs 3.2 s at 2 (the r06 heavy-tail item).
-from cs744_big_data_system_spark.plans.tuning import (
-    loop_shuffle_partitions as _loop_shuffle_partitions,
-)
+
+#: superstep index from which pointer jumping joins in. 3 keeps the
+#: common small-diameter case (sf0.1 simhash clusters converge in 2-3
+#: supersteps) on the exact pre-r08 plan; only genuinely long chains
+#: pay the extra label-table join — and then converge geometrically.
+COMPRESS_FROM = 3
 
 
 def connected_components(
@@ -64,27 +63,8 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # One count to materialize the cache (the loop needs it anyway)
-    # AND size the loop's shuffle width from the actual edge volume.
-    n_und = und.count()
-    with _loop_shuffle_partitions(edges.sparkSession, n_und):
-        labels = _cc_loop(und, max_iterations, checkpoint_every)
-    # On the converged path labels is already an eager checkpoint (the
-    # early-stop fires only right after one); either way the lineage no
-    # longer references und, so its cache can be released without
-    # forcing a recompute on the caller's first action.
-    und.unpersist()
-    return labels
-
-
-#: superstep index from which pointer jumping joins in. 3 keeps the
-#: common small-diameter case (sf0.1 simhash clusters converge in 2-3
-#: supersteps) on the exact pre-r08 plan; only genuinely long chains
-#: pay the extra label-table join — and then converge geometrically.
-COMPRESS_FROM = 3
-
-
-def _cc_loop(und: DataFrame, max_iterations: int, checkpoint_every: int) -> DataFrame:
+    # Materialize the edge cache: every superstep reads it twice.
+    und.count()
     labels = und.select(F.col("a").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
@@ -179,6 +159,11 @@ def _cc_loop(und: DataFrame, max_iterations: int, checkpoint_every: int) -> Data
                 "iterations (component diameter too large) — raise max_iterations"
             )
 
+    # On the converged path labels is already an eager checkpoint (the
+    # early-stop fires only right after one); either way the lineage no
+    # longer references und, so its cache can be released without
+    # forcing a recompute on the caller's first action.
+    und.unpersist()
     return labels
 
 
@@ -194,25 +179,19 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "doc_a", id_b: str = "doc_b") -
     # the loop mean und (and everything above it) is already
     # materialized by then.
     pairs = pairs.persist()
-    n_pairs = pairs.count()
     try:
         cc = connected_components(pairs, src=id_a, dst=id_b)
     finally:
         pairs.unpersist()
-    # The size rollup + back-join run on the label table (|nodes| ≤
-    # 2·|pairs| rows) — same tiny-shuffle regime as the loop itself,
-    # so reuse the edge-count sizing. The result is materialized INSIDE
-    # the scope (checkpoint) so no lazy stage escapes to run wide.
-    with _loop_shuffle_partitions(pairs.sparkSession, n_pairs):
-        sizes = cc.groupBy("component").agg(
-            F.count(F.lit(1)).alias("cluster_size")
+    # Materialized once: consumers such as dedup_keep_best join the
+    # cluster table twice.
+    sizes = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return (
+        cc.join(sizes, "component")
+        .select(
+            F.col("node").alias("doc_id"),
+            F.col("component").alias("cluster_id"),
+            "cluster_size",
         )
-        return (
-            cc.join(sizes, "component")
-            .select(
-                F.col("node").alias("doc_id"),
-                F.col("component").alias("cluster_id"),
-                "cluster_size",
-            )
-            .localCheckpoint(eager=True)
-        )
+        .localCheckpoint(eager=True)
+    )

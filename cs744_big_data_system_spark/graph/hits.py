@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-
 
 def hits(
     edges: DataFrame,
@@ -46,10 +44,8 @@ def hits(
         .distinct()
         .persist()
     )
-    # Materialize the edge cache and size the loop width from |E|
-    # (plans/tuning.py): every half-round shuffles node/edge-bounded
-    # rows, so session-width tasks on a small graph are pure overhead.
-    n_w = w.count()
+    # Materialize the edge cache: nodes and every half-round read it.
+    w.count()
 
     auth = nodes.select("node", F.lit(1.0).alias("auth"))
     hub = nodes.select("node", F.lit(1.0).alias("hub"))
@@ -73,16 +69,6 @@ def hits(
             "node", (F.col("raw") / F.col("_mx")).alias(out_col)
         )
 
-    with loop_shuffle_partitions(edges.sparkSession, n_w):
-        auth, hub = _hits_loop(w, nodes, auth, hub, iterations, _normalized)
-        # materialize the final join INSIDE the scoped width (the loop
-        # state is already checkpointed; this is one |V|-row join)
-        out = auth.join(hub, "node").localCheckpoint(eager=True)
-    out.cached_links = w  # caller may unpersist
-    return out
-
-
-def _hits_loop(w, nodes, auth, hub, iterations, _normalized):
     for _ in range(iterations):
         auth_raw = (
             w.join(hub.withColumnRenamed("node", "src"), "src")
@@ -103,4 +89,6 @@ def _hits_loop(w, nodes, auth, hub, iterations, _normalized):
             "node", F.coalesce("raw", F.lit(0.0)).alias("raw")
         )
         hub = _normalized(hub_raw, "hub")
-    return auth, hub
+    out = auth.join(hub, "node")
+    out.cached_links = w  # caller may unpersist
+    return out

@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-
 
 def label_propagation(
     edges: DataFrame,
@@ -43,26 +41,12 @@ def label_propagation(
         links = links.repartition(num_partitions, "src")
     links = links.persist()
 
-    # Materialize the cache + size the loop width from the edge count
-    # (plans/tuning.py): per-round vote rows are bounded by |E|.
-    n_links = links.count()
+    # Materialize the edge cache: nodes and every round read it.
+    links.count()
 
     nodes = links.select(F.col("src").alias("node")).distinct()
     labels = nodes.select("node", F.col("node").alias("label"))
 
-    with loop_shuffle_partitions(links.sparkSession, n_links):
-        labels = _lpa_loop(links, labels, iterations)
-        # No per-round action in LPA (unlike BFS/SSSP's frontier
-        # counts), so force the lazy checkpoint chain HERE — otherwise
-        # the whole 5-round lineage would evaluate lazily at the
-        # caller's first action, outside the scoped width.
-        labels.count()
-
-    labels.cached_links = links
-    return labels
-
-
-def _lpa_loop(links: DataFrame, labels: DataFrame, iterations: int) -> DataFrame:
     for _ in range(iterations):
         # Neighbor labels: edge (src→dst) contributes src's label to
         # dst. The join reuses links' src partitioning; the vote count
@@ -83,6 +67,7 @@ def _lpa_loop(links: DataFrame, labels: DataFrame, iterations: int) -> DataFrame
             .select("node", "label")
             .localCheckpoint(eager=False)
         )
+    labels.cached_links = links
     return labels
 
 

@@ -34,8 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-
 
 def sssp(
     edges: DataFrame,
@@ -57,11 +55,8 @@ def sssp(
         links = links.repartition(num_partitions, "src")
     links = links.persist()
 
-    # Materialize the cache and size the loop's shuffle width from the
-    # edge count (see plans/tuning.py): the per-round min-groupBy and
-    # dist joins move frontier-bounded data, so session-width shuffles
-    # on a 12k-edge workload graph are pure task-scheduling overhead.
-    n_links = links.count()
+    # Materialize the edge cache: every round reads it.
+    links.count()
 
     node_type = dict(links.dtypes)["src"]
     dist = spark.range(1).select(
@@ -70,20 +65,6 @@ def sssp(
     frontier = dist
     dist_rows = 1
 
-    with loop_shuffle_partitions(spark, n_links):
-        dist = _sssp_loop(
-            links, dist, frontier, dist_rows, max_iters, broadcast_threshold
-        )
-        # Materialize INSIDE the scoped-width block (ADVICE r07): the
-        # final anti-join+union level is lazy, and evaluating it at the
-        # caller's first action would run at full session width.
-        dist = dist.localCheckpoint(eager=True)
-
-    dist.cached_links = links
-    return dist
-
-
-def _sssp_loop(links, dist, frontier, dist_rows, max_iters, broadcast_threshold):
     for it in range(1, max_iters + 1):
         # Relax edges out of last round's improved nodes. The candidate
         # min per dst is map-side combinable; the improvement check is
@@ -125,4 +106,5 @@ def _sssp_loop(links, dist, frontier, dist_rows, max_iters, broadcast_threshold)
             .unionByName(frontier)
             .localCheckpoint(eager=False)
         )
+    dist.cached_links = links
     return dist

@@ -83,18 +83,7 @@ def _with_canon_tokens(documents: DataFrame, *keep_cols: str) -> DataFrame:
     column. Near-dup detection must be insensitive to trivial byte
     differences; materializing (vs inlining the split expression) is
     what keeps the downstream n-gram transform from re-running the
-    regex per element — measured 10× at sf0.1.
-
-    Fans out a split-starved scan first (plans/tuning.fan_out_small_scan)
-    so the tokenize→n-gram→hash chains that every caller builds on top
-    run at session parallelism instead of inside the scan's single
-    task — no-op when the scan already fills the cores. Callers must
-    not put a derived filter on the token column below their first
-    exchange (use the *_outer explode forms) or the planner will push
-    it below this repartition and re-run the tokenizer serially."""
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    documents = fan_out_small_scan(documents, keep_cols[0] if keep_cols else None)
+    regex per element — measured 10× at sf0.1."""
     return documents.select(*keep_cols, tokens(normalized_text("text")).alias("_tk"))
 
 
@@ -104,12 +93,7 @@ def shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     by (doc_id, shingle), which is high-cardinality and skew-free."""
     return (
         _with_canon_tokens(documents, "doc_id")
-        # explode_OUTER + not-null instead of plain explode: the
-        # implicit size()>0 pre-filter a plain explode inserts would be
-        # pushed below the fan-out exchange and re-run the tokenizer
-        # serially on the scan side (see substring_dup_coverage).
-        .select("doc_id", F.explode_outer(ngrams_from_tokens("_tk", n)).alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
+        .select("doc_id", F.explode(ngrams_from_tokens("_tk", n)).alias("shingle"))
         .distinct()
     )
 
@@ -146,9 +130,7 @@ def pruned_shingle_table(
         _with_canon_tokens(documents, *doc_cols)
         .select(
             *doc_cols,
-            # outer + the not-null filter below, so no implicit
-            # size()>0 pre-filter lands under the fan-out exchange
-            F.explode_outer(
+            F.explode(
                 F.transform(ngrams_from_tokens("_tk", n), md5_int60)
             ).alias("shingle"),
         )
@@ -611,6 +593,7 @@ def simhash(documents: DataFrame, bits: int = 60) -> DataFrame:
     single groupBy(doc_id, bit) sum, then a pivot-free reassembly via
     conditional sum — two narrow shuffles, both keyed by doc_id.
     """
+    # explode_OUTER + not-null: see substring_dup_coverage.
     tok = _with_canon_tokens(documents, "doc_id").select(
         "doc_id", F.explode_outer("_tk").alias("tok")
     ).filter(F.col("tok").isNotNull())
@@ -660,11 +643,9 @@ def simhash_hamming_pairs(
     mask = (1 << band_bits) - 1
     sig = simhash(documents, bits)
     # No explicit repartition on the (band_idx, band_val) join key: it
-    # was tried in r11 and dropped (commit bfef8dd) — with the scan
-    # fan-out inside simhash() the duplicated signature subtree above
-    # the reused scan exchange is cheap (the planner broadcasts one
-    # side), while forcing both sides through a band-key exchange put
-    # an extra shuffle on the critical path and cost ~1 s at sf0.1.
+    # was tried in r11 and dropped (commit bfef8dd) — forcing both
+    # sides through a band-key exchange put an extra shuffle on the
+    # critical path and cost ~1 s at sf0.1.
     entries = sig.select(
         "doc_id",
         "simhash",
@@ -771,12 +752,6 @@ def embedding_cosine_neardup_lsh(
     # ~100× slower at num_bands × planes_per_band dot products per row),
     # then posexplode to (band_idx, bucket) rows.
     buckets = lsh_band_buckets_udf(dim, num_bands, planes_per_band)
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    # Fan a split-starved scan out BEFORE the Arrow UDF: the banded
-    # matmul otherwise runs in a single Python worker on the scan's one
-    # task (no-op at cluster scale).
-    embeddings = fan_out_small_scan(embeddings, id_col)
     entries = embeddings.select(
         F.col(id_col), F.posexplode(buckets(F.col(vec_col).cast("array<double>"))).alias(
             "band_idx", "bucket"
@@ -853,14 +828,12 @@ def substring_dup_coverage(
         F.size("_tk").alias("n_tokens"),
         ngrams_from_tokens("_tk", n).alias("_g"),
     )
-    # posexplode_OUTER, then drop the null row: plain posexplode makes
-    # the planner insert an implicit `size(_g) > 0` pre-filter, which
-    # gets pushed below the fan-out exchange and re-runs the whole
-    # tokenize→ngram chain serially on the split-starved scan side
-    # (r11 profile: a 4.5 s single-task stage doing nothing but that
-    # pushed filter). The outer form needs no pre-filter; the explicit
-    # pos-not-null filter above the exchange is one null check per row
-    # and drops exactly the rows posexplode skipped.
+    # posexplode_OUTER, then drop the null row: a plain (pos)explode
+    # of a column makes the planner insert an implicit `size(_g) > 0`
+    # pre-filter, which is pushed below the projection and evaluates
+    # the whole tokenize→ngram chain a second time. The outer form
+    # needs no pre-filter; the explicit pos-not-null filter is one null
+    # check per row and drops exactly the rows posexplode skipped.
     pos = (
         docs.select(
             "doc_id",

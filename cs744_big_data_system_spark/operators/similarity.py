@@ -28,24 +28,6 @@ from cs744_big_data_system_spark.functions.vectors import cosine_similarity
 from cs744_big_data_system_spark.operators.dedup import md5_int60
 
 
-def _fanned(df: DataFrame, id_col: str | None = "vec_id") -> DataFrame:
-    """Fan a split-starved corpus scan out to session parallelism
-    before vector math (dot products, BLAS-batched Arrow UDFs, the
-    dim^2 coordinate-pair explode) — at bench scale the one-row-group
-    fixture scans as ONE task and every downstream flop runs serially;
-    at cluster scale this is a no-op (plans/tuning.fan_out_small_scan).
-    The pushed-down implicit generate-filters here are trivial (array
-    size checks, no regex), so plain posexplode stays."""
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    try:
-        if id_col is not None and id_col not in df.columns:
-            id_col = None
-    except Exception:
-        id_col = None
-    return fan_out_small_scan(df, id_col)
-
-
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -71,7 +53,7 @@ def cosine_topk_bruteforce(
         F.col(vec_col).alias("q_emb"),
         l2_norm(vec_col).alias("_qn"),
     )
-    c = _fanned(corpus, id_col).select(
+    c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_emb"),
         l2_norm(vec_col).alias("_cn"),
@@ -189,7 +171,7 @@ def ivf_assign(
     the ROUNDED cosine with centroid-id tiebreak so assignment is
     exactly reproducible.
     """
-    v = _fanned(vectors, id_col).select(F.col(id_col), F.col(vec_col).alias("_v_emb"))
+    v = vectors.select(F.col(id_col), F.col(vec_col).alias("_v_emb"))
     c = centroids.select(
         F.col(centroid_id_col), F.col(vec_col).alias("_c_emb")
     )
@@ -276,7 +258,7 @@ def cosine_topk_lsh(
         F.col(vec_col).alias("q_emb"),
         lsh_bucket(vec_col, dim, num_planes).alias("bucket"),
     )
-    bc = _fanned(corpus, id_col).select(
+    bc = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_emb"),
         lsh_bucket(vec_col, dim, num_planes).alias("bucket"),
@@ -507,11 +489,6 @@ def embedding_covariance(
     explode; the per-dimension means are a dim-row broadcast join. No
     driver collect, no window.
     """
-    # Plain scan, no fan-out: this is the cheap-columnar-aggregate case
-    # fan_out_small_scan's own contract excludes — the explode feeds a
-    # map-side-combinable hash aggregate, and the r11 driver bench
-    # measured the repartition as a consistent ~2x REGRESSION
-    # (0.55 -> 1.12 s across four runs). Reverted in r12.
     x = embeddings.select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("i", "xi"),
@@ -677,9 +654,6 @@ def embedding_frechet_diag(
     explode — 2·dim aggregate cells regardless of corpus size — and a
     dim-row final reduce.
     """
-    # Plain scan, no fan-out — same revert rationale as
-    # embedding_covariance above (consistent ~1.6x regression in r11:
-    # 0.39 -> 0.64 s; the explode feeds a 2*dim-cell hash aggregate).
     x = embeddings.select(
         (F.col(slice_col) == slice_value).alias("_p"),
         F.posexplode(F.col(vec_col).cast("array<double>")).alias("d", "xi"),

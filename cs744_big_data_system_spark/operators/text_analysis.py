@@ -51,23 +51,6 @@ def lang_id(text_col) -> Column:
     return expr
 
 
-def _fanned(documents: DataFrame, key: str | None = "doc_id") -> DataFrame:
-    """Fan a split-starved documents scan out to session parallelism
-    before the tokenize-heavy projections below (see
-    plans/tuning.fan_out_small_scan — no-op when the scan already fills
-    the cores). Callers pair it with *_outer explodes + not-null
-    filters so no implicit size()>0 generate-filter is pushed below the
-    fan-out exchange (the dedup-family lesson from the r11 profile)."""
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    try:
-        if key is not None and key not in documents.columns:
-            key = None
-    except Exception:
-        key = None
-    return fan_out_small_scan(documents, key)
-
-
 def quality_features(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_chars_obs, mean_token_len, punct_ratio,
     stopword_ratio_en, quality_ok) — the standard cheap pre-filter
@@ -117,10 +100,9 @@ def boilerplate_phrases(documents: DataFrame, n: int = 6, min_docs: int = 3) -> 
     from cs744_big_data_system_spark.functions.text import ngrams_from_tokens, tokens
 
     grams = (
-        _fanned(documents)
+        documents
         .select("doc_id", tokens(normalized_text("text")).alias("_tk"))
-        .select("doc_id", F.explode_outer(ngrams_from_tokens("_tk", n)).alias("phrase"))
-        .filter(F.col("phrase").isNotNull())
+        .select("doc_id", F.explode(ngrams_from_tokens("_tk", n)).alias("phrase"))
     )
     # Fold the phrase to a 60-bit key before the shuffles (same move
     # as ngram_jaccard_pairs): distinct + count are keyed by 8 bytes,
@@ -155,12 +137,15 @@ def tfidf_bm25_topk(
     collected; top-k per doc is one row_number window. Doc length
     rides through the explode, so no per-doc join is needed.
     """
-    canon = _fanned(documents).select(
+    canon = documents.select(
         "doc_id", tokens(normalized_text("text")).alias("_tk")
     )
     stats = canon.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("_tk")).alias("avgdl")
     )
+    # explode_OUTER + not-null: a plain explode of the _tk column gets
+    # an implicit size()>0 pre-filter that is pushed below the
+    # projection and runs the tokenizer a second time.
     terms = canon.select(
         "doc_id", F.size("_tk").alias("dl"), F.explode_outer("_tk").alias("term")
     ).filter(F.col("term").isNotNull())
@@ -201,11 +186,12 @@ def cooccurrence_pmi(
     regardless of corpus size. The corpus-size scalar is broadcast,
     never collected.
     """
-    canon = _fanned(documents).select(
+    canon = documents.select(
         "doc_id", tokens(normalized_text("text")).alias("_tk")
     )
     stats = canon.agg(F.count(F.lit(1)).alias("n_docs"))
     dt = (
+        # explode_OUTER + not-null: see tfidf_bm25_topk
         canon.select("doc_id", F.explode_outer("_tk").alias("term"))
         .filter(F.col("term").isNotNull())
         .distinct()
@@ -255,7 +241,7 @@ def fingerprints(documents: DataFrame) -> DataFrame:
     # Materialize canonical text + tokens first — an inlined tokenizer
     # would re-run the regex split per n-gram element (see
     # functions/text.ngrams_from_tokens).
-    canon = _fanned(documents).select(
+    canon = documents.select(
         "doc_id",
         normalized_text("text").alias("_ct"),
         tokens(normalized_text("text")).alias("_tk"),
@@ -498,10 +484,8 @@ def bigram_lm(documents: DataFrame, min_count: int = 5) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    canon = _fanned(documents).select(tokens(normalized_text("text")).alias("_tk"))
-    grams = canon.select(
-        F.explode_outer(ngrams_from_tokens_2("_tk")).alias("gram")
-    ).filter(F.col("gram").isNotNull())
+    canon = documents.select(tokens(normalized_text("text")).alias("_tk"))
+    grams = canon.select(F.explode(ngrams_from_tokens_2("_tk")).alias("gram"))
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n_big"))
     w1 = F.substring_index("gram", " ", 1)
     with_w1 = counts.select(w1.alias("w1"), F.substring_index("gram", " ", -1).alias("w2"), "n_big")
@@ -550,12 +534,12 @@ def perplexity_score(
     aggregation. At 100 TB the scan + explode dominates; nothing else
     grows with corpus size.
     """
-    canon = _fanned(documents).select(
+    canon = documents.select(
         "doc_id", tokens(normalized_text("text")).alias("_tk")
     )
     grams = canon.select(
-        "doc_id", F.explode_outer(ngrams_from_tokens_2("_tk")).alias("gram")
-    ).filter(F.col("gram").isNotNull())
+        "doc_id", F.explode(ngrams_from_tokens_2("_tk")).alias("gram")
+    )
     lm_k = lm.select(
         F.concat_ws(" ", "w1", "w2").alias("gram"), F.col("logp")
     )
@@ -627,7 +611,7 @@ def repetition_features(
     """
     from cs744_big_data_system_spark.functions.text import ngrams_from_tokens
 
-    with_grams = _fanned(documents).select(
+    with_grams = documents.select(
         "doc_id", tokens(normalized_text("text")).alias("_tk")
     ).select("doc_id", ngrams_from_tokens("_tk", n).alias("_g"))
     n_grams = F.size("_g")
@@ -747,10 +731,8 @@ def feature_hash_bow(
     from cs744_big_data_system_spark.functions.text import normalized_text, tokens
     from cs744_big_data_system_spark.operators.dedup import md5_int60
 
-    tok = (
-        _fanned(documents)
-        .select("doc_id", F.explode_outer(tokens(normalized_text(text_col))).alias("token"))
-        .filter(F.col("token").isNotNull())
+    tok = documents.select(
+        "doc_id", F.explode(tokens(normalized_text(text_col))).alias("token")
     )
     h = md5_int60(F.col("token"))
     # sign from the 16th md5 hex digit — INDEPENDENT of the 60-bit
@@ -934,17 +916,17 @@ def dsir_weights(
     noise (~1e-13) for the oracle hash check.
     """
     def doc_buckets(df: DataFrame) -> DataFrame:
-        tk = _fanned(df).select(
+        tk = df.select(
             "doc_id", tokens(normalized_text("text")).alias("_tk")
         )
         from cs744_big_data_system_spark.functions.text import ngrams_from_tokens
 
         grams = tk.select(
             "doc_id",
-            F.explode_outer(
+            F.explode(
                 F.concat(F.col("_tk"), ngrams_from_tokens("_tk", 2))
             ).alias("gram"),
-        ).filter(F.col("gram").isNotNull())
+        )
         return grams.select(
             "doc_id", F.pmod(md5_int60(F.col("gram")), F.lit(num_buckets)).alias("b")
         )
@@ -1001,24 +983,17 @@ def winnowing_fingerprints(
     The rightmost-tie argmin is min-of-struct((hash, −pos)) over the
     frame, the same map-friendly trick as the kmeans assignment.
     """
-    # Fan the split-starved scan out (keyed on doc_id — exactly the
-    # distribution the window below requires, so no second exchange)
-    # and use posexplode_OUTER + an explicit pos not-null: a plain
-    # posexplode's implicit size()>0 pre-filter would be pushed below
-    # the fan-out exchange and re-run the tokenize→ngram→md5 chain
-    # serially on the scan side (the r11 dedup-family lesson; this
-    # operator was named in the r11 audit as never having received it).
-    tk = _fanned(documents).select(
+    tk = documents.select(
         "doc_id", tokens(normalized_text("text")).alias("_tk")
     )
     from cs744_big_data_system_spark.functions.text import ngrams_from_tokens
 
     ph = tk.select(
         "doc_id",
-        F.posexplode_outer(
+        F.posexplode(
             F.transform(ngrams_from_tokens("_tk", k), md5_int60)
         ).alias("pos", "gh"),
-    ).filter(F.col("pos").isNotNull())
+    )
     from pyspark.sql import Window
 
     w1 = (
@@ -1064,9 +1039,8 @@ def corpus_drift_kl(
     one token-explode groupBy.
     """
     tok = (
-        _fanned(documents, None)
-        .select(F.col(slice_col).alias("_s"), F.explode_outer(tokens("text")).alias("tok"))
-        .filter(F.col("tok").isNotNull())
+        documents
+        .select(F.col(slice_col).alias("_s"), F.explode(tokens("text")).alias("tok"))
         .select("_s", F.pmod(md5_int60(F.col("tok")), F.lit(num_buckets)).alias("b"))
     )
     counts = tok.groupBy("b").agg(

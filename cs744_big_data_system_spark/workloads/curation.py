@@ -158,8 +158,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     # shingle md5 outweighs the byte saving at this SF) — reverted.
     # The intermittent 10-35 s mode this query showed in r11/r12 full-
     # suite runs was diagnosed instead as collectable cross-rep JVM
-    # garbage (see bench.py time_query) and fixed by per-rep GC pacing
-    # plus the memory-capped fan-out width (plans/tuning.py).
+    # garbage (see bench.py time_query) and fixed by per-rep GC pacing.
     probe = corpus.select("doc_id", "shingle", ks).withColumn(
         "bitpos", _bloom_bitpos(F.col("j"), F.col("shingle"))
     )
@@ -169,8 +168,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     # an equi-key), so the two are equal — and countDistinct planned a
     # second, wider hash-aggregate phase keyed (doc_id, shingle, j)
     # whose 32-way concurrent string-keyed maps were the peak-heap
-    # driver of the r11 vanilla-sweep OOM (old code passed a 600 MB
-    # solo probe; fan-out code OOMed until this narrowing).
+    # driver of the r11 vanilla-sweep OOM.
     members = (
         probe.join(F.broadcast(bits), "bitpos")
         .groupBy("doc_id", "shingle")

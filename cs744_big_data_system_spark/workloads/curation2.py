@@ -1001,12 +1001,7 @@ def _synthetic_wav_assets(spark, sf_dir):
     without any media files in the fixture."""
     import struct
 
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    # md5-derived PCM bytes are ~16 md5s per doc; fan a split-starved
-    # scan out so the byte synthesis and the downstream Arrow decode
-    # run at session parallelism (no-op at cluster scale).
-    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents")
     n_bytes = _AUDIO_SAMPLES * 2
     header = struct.pack(
         "<4sI4s4sIHHIIHH4sI",

@@ -42,18 +42,8 @@ def q_sql_recursive_cte(spark, sf_dir):
     bill-of-materials) that Spark 4 added and the reference's RDD
     surface never had. Output is the per-depth roll-up so the result
     stays small at every sf."""
-    from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-
-    cust = load_table(spark, sf_dir, "customer")
-    cust.createOrReplaceTempView("rec_customer")
-    # Each recursion level shuffles ≤ |customer| rows; scope the width
-    # to the table size (count-star is footer-cheap) and materialize
-    # inside — log N levels × session-width tasks is the dominant cost
-    # on a 15k-row hierarchy (plans/tuning.py).
-    with loop_shuffle_partitions(spark, cust.count()):
-        return spark.sql(
-            _RECURSIVE_SQL.format(table="rec_customer")
-        ).localCheckpoint(eager=True)
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("rec_customer")
+    return spark.sql(_RECURSIVE_SQL.format(table="rec_customer"))
 
 
 _RECURSIVE_SQL = """
@@ -243,11 +233,11 @@ def q_bm25_search_topk(spark, sf_dir):
     from cs744_big_data_system_spark.functions.text import normalized_text, tokens
 
     k1, b = 1.2, 0.75
-    # NOTE (r12 negative result, A/B-killed at 32 cores): a scan
-    # fan-out + non-nullable keys (to AQE-share the (doc,term) counts
-    # exchange between its two consumers) measured 1.83 s -> 2.25 s —
-    # the bare tokenize chain here is cheaper than the exchange it
-    # rides, and the duplicated branches overlap on idle cores.
+    # NOTE (r12 negative result, A/B-killed at 32 cores): a repartition
+    # + non-nullable keys (to AQE-share the (doc,term) counts exchange
+    # between its two consumers) measured 1.83 s -> 2.25 s — the bare
+    # tokenize chain here is cheaper than the exchange it rides, and
+    # the duplicated branches overlap on idle cores.
     canon = docs.select("doc_id", tokens(normalized_text("text")).alias("_tk"))
     stats = canon.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg(F.size("_tk")).alias("avgdl")
@@ -559,12 +549,7 @@ def _synthetic_video_assets(spark, sf_dir):
     stdlib path (operators/multimodal._decode_ppm)."""
     import struct
 
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    # ~6 frames x 9 md5s per doc of synthesis + a Python decode per
-    # row downstream: fan a split-starved scan out first (no-op at
-    # cluster scale).
-    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents")
     n_frames = 3 + F.col("doc_id") % 4
 
     def frame_blob(f: int):

@@ -163,12 +163,7 @@ def q_graph_random_walks(spark, sf_dir):
     the edge table is never materialized per-walk (contrast the
     classic per-node adjacency-list broadcast, which dies at web
     scale). Walk count scales horizontally: frontier rows = walks."""
-    from cs744_big_data_system_spark.plans.tuning import loop_shuffle_partitions
-    from cs744_big_data_system_spark.workloads.streaming_graph import (
-        TRI_D,
-        TRI_N,
-        _hash_graph,
-    )
+    from cs744_big_data_system_spark.workloads.streaming_graph import TRI_N, _hash_graph
 
     edges = _hash_graph(spark)
     cur = spark.range(_WALKS).select(
@@ -176,29 +171,24 @@ def q_graph_random_walks(spark, sf_dir):
         ((F.col("id") * 37) % TRI_N).cast("long").alias("node"),
     )
     visits = [cur.select("walk", F.lit(0).alias("step"), "node")]
-    # The per-step groupBy moves ≤ _WALKS·TRI_D rows; scope the width
-    # to the (known, synthetic) graph size and materialize inside —
-    # session-width tasks per step are pure scheduling overhead
-    # (plans/tuning.py).
-    with loop_shuffle_partitions(spark, TRI_N * TRI_D):
-        for s in range(1, _STEPS + 1):
-            key = F.md5(
-                F.concat(
-                    F.col("walk").cast("string"),
-                    F.lit(f":{s}:"),
-                    F.col("dst").cast("string"),
-                )
+    for s in range(1, _STEPS + 1):
+        key = F.md5(
+            F.concat(
+                F.col("walk").cast("string"),
+                F.lit(f":{s}:"),
+                F.col("dst").cast("string"),
             )
-            cur = (
-                cur.join(edges, cur["node"] == edges["src"])
-                .groupBy("walk")
-                .agg(F.min_by("dst", key).alias("node"))
-            )
-            visits.append(cur.select("walk", F.lit(s).alias("step"), "node"))
-        out = visits[0]
-        for v in visits[1:]:
-            out = out.unionByName(v)
-        return out.localCheckpoint(eager=True)
+        )
+        cur = (
+            cur.join(edges, cur["node"] == edges["src"])
+            .groupBy("walk")
+            .agg(F.min_by("dst", key).alias("node"))
+        )
+        visits.append(cur.select("walk", F.lit(s).alias("step"), "node"))
+    out = visits[0]
+    for v in visits[1:]:
+        out = out.unionByName(v)
+    return out
 
 
 def _sql_graph_random_walks() -> str:
@@ -426,29 +416,14 @@ def q_ml_kfold_cv(spark, sf_dir):
     ratios of exact-integer-valued doubles, per-row errors are
     floored to integer cents before summing."""
     li = load_table(spark, sf_dir, "lineitem")
-    # Fan out the RAW scan projection BEFORE the fold assignment is
-    # computed: two adjacent repartitions collapse (Catalyst's
-    # CollapseRepartition removes the lower one — the r11 version
-    # called fan_out on the already-projected rows directly under
-    # .repartition("fold") and the fan-out never materialized), but a
-    # computing Project between the two exchanges blocks the collapse,
-    # so the md5 fold assignment genuinely runs at session parallelism
-    # between the fan-out exchange and the fold exchange.
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    raw = fan_out_small_scan(
-        li.select("l_quantity", "l_extendedprice", "l_orderkey", "l_linenumber"),
-        "l_extendedprice",
-    )
-    rows = raw.select(
+    rows = li.select(
         F.col("l_quantity").cast("long").alias("x"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
         # coalesce-to-0 marks fold NON-NULLABLE (it never is null: md5
         # of non-null keys), so the final join generates no inferred
-        # isnotnull(fold) that predicate pushdown would sink below the
-        # fan-out exchange and re-run the md5 serially on the scan side
-        # -- and with no filter anywhere, all three consumers of the
-        # fold exchange canonicalize identically for AQE reuse.
+        # isnotnull(fold) filter — with no filter anywhere, all three
+        # consumers of the fold exchange canonicalize identically for
+        # AQE reuse.
         F.coalesce(
             F.conv(
                 F.substring(

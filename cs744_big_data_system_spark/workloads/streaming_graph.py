@@ -1756,11 +1756,8 @@ def q_multimodal_resize(spark, sf_dir):
     rows-only (mirroring PPM re-encoding in SQL is not practical), with
     the pixel math itself verified in tests on hand-built images."""
     from cs744_big_data_system_spark.operators.multimodal import resize_images
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
 
-    # fan a split-starved scan out: md5 pixel synthesis + the Python
-    # decode/resize otherwise run inside the scan's one task
-    docs = fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
+    docs = load_table(spark, sf_dir, "documents")
     header = F.lit(b"P6\n4 4\n255\n")
     pixels = F.concat(*[
         F.to_binary(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(f":px{i}"))),
@@ -1814,11 +1811,7 @@ def q_multimodal_doc_features(spark, sf_dir):
         extract_features,
     )
 
-    from cs744_big_data_system_spark.plans.tuning import fan_out_small_scan
-
-    assets = assets_from_documents(
-        fan_out_small_scan(load_table(spark, sf_dir, "documents"), "doc_id")
-    )
+    assets = assets_from_documents(load_table(spark, sf_dir, "documents"))
     feats = extract_features(assets)
     return feats.select(
         "asset_id",

@@ -6,6 +6,7 @@ memory sink), not a batch simulation."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -394,3 +395,52 @@ def test_rocksdb_state_store_equals_default_provider(spark):
     finally:
         spark.conf.unset(key)
     assert rocksdb_out == default_out and len(default_out) > 0
+
+
+def test_parquet_state_partitions_file_and_dir(spark, tmp_path):
+    from cs744_big_data_system_spark.streaming.windows import (
+        _rows_to_state_partitions,
+        parquet_state_partitions,
+    )
+
+    # sizing law: <=128k rows -> 8; +1 per 16k; cap 32
+    assert _rows_to_state_partitions(0) == "8"
+    assert _rows_to_state_partitions(128_000) == "8"
+    assert _rows_to_state_partitions(160_000) == "10"
+    assert _rows_to_state_partitions(10_000_000) == "32"
+
+    d = str(tmp_path / "t")
+    spark.range(1000).coalesce(2).write.parquet(d)
+    assert parquet_state_partitions(d) == "8"
+    one = next(
+        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+    )
+    assert parquet_state_partitions(one) == "8"
+
+
+def test_replay_checkpoint_dir_prefers_tmpfs():
+    import shutil
+
+    from cs744_big_data_system_spark.streaming.windows import replay_checkpoint_dir
+
+    d = replay_checkpoint_dir()
+    try:
+        assert os.path.isdir(d)
+        if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+            assert d.startswith("/dev/shm/"), d
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_drain_stream_reentrancy_guard(spark):
+    """A nested drain must raise loudly instead of silently running the
+    session at the inner width (ADVICE r06)."""
+    from cs744_big_data_system_spark.streaming import windows as W
+
+    assert not W._DRAIN_ACTIVE
+    W._DRAIN_ACTIVE = True
+    try:
+        with pytest.raises(RuntimeError, match="not reentrant"):
+            W._drain_stream(spark, None, "update")
+    finally:
+        W._DRAIN_ACTIVE = False

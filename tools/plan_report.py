@@ -284,10 +284,9 @@ def main() -> None:
         "partial aggs / TakeOrderedAndProject / WindowGroupLimit (top-k rank",
         "pushdown) / parquet scans. Streaming / iterative queries are",
         "excluded (their plans are per-micro-batch / per-superstep).",
-        "Rows reading all-zero with 0 scans (graph_hits, graph_random_walks,",
-        "sql_recursive_cte, global_row_ids, exact_quantiles_2pass,",
-        "synthdocs_profile, ...) return an EAGER CHECKPOINT: their work ran",
-        "inside a scoped-width loop (plans/tuning.py) or a two-pass driver",
+        "Rows reading all-zero with 0 scans (graph_hits, global_row_ids,",
+        "exact_quantiles_2pass, synthdocs_profile, ...) return an EAGER",
+        "CHECKPOINT: their work ran inside an iterative loop or a two-pass driver",
         "sequence before the report sees the plan, so the returned plan is",
         "a LogicalRDD scan of the materialized result — the loop-body plan",
         "shapes are pinned by tests/test_plans.py instead.",

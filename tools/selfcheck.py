@@ -124,12 +124,12 @@ def _vanilla_spark():
         .config("spark.ui.showConsoleProgress", "false")
         # UI status-store retention, third perf-only override: the
         # defaults keep up to 100k task + 1000 execution entries LIVE
-        # in the app status store, and the r11 fan-out raised
-        # tasks-per-stage ~10x — a 316-query marathon in this session's
-        # default 1 GiB heap OOMed at query ~245 on retained UI state
-        # alone (solo re-run of the failing query on a fresh vanilla
-        # session passes; System.gc() pacing did not help because the
-        # references are live). Caps cannot change any query's values.
+        # in the app status store — in r11 a 316-query marathon in
+        # this session's default 1 GiB heap OOMed at query ~245 on
+        # retained UI state alone (solo re-run of the failing query on
+        # a fresh vanilla session passes; System.gc() pacing did not
+        # help because the references are live). Caps cannot change
+        # any query's values.
         .config("spark.ui.retainedJobs", "100")
         .config("spark.ui.retainedStages", "100")
         .config("spark.ui.retainedTasks", "2000")
@@ -146,7 +146,6 @@ def main():
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entrymod
 
     if vanilla:
@@ -172,8 +171,7 @@ def main():
         # accumulates them faster than a mostly-idle 1 GiB vanilla heap
         # GCs on its own — the r11 vanilla sweep OOMed at query ~245
         # (java.lang.OutOfMemoryError in a task, then every later query
-        # failing in the poisoned session) after the fan-out exchanges
-        # raised the per-query shuffle count. Same fix bench.py has
+        # failing in the poisoned session). Same fix bench.py has
         # carried since r06 (one System.gc() per query, measured 2 s vs
         # 14-20 s BFS spikes); here every 10 queries keeps the sweep
         # overhead negligible. Results are unaffected — this only paces
